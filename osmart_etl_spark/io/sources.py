@@ -129,10 +129,10 @@ def read_jsonl(
     Scale notes: the schema is REQUIRED — schema inference is a full
     extra pass over the data, unacceptable at 100 TB. Unparseable lines
     become quarantine rows instead of being dropped silently (the same
-    errors-as-data doctrine as the multimodal decoders and the CSV
-    quarantine sink, S9); callers route the quarantine side to a sink
-    rather than losing it. Implemented as ``text`` + ``from_json``
-    rather than the DataFrameReader's PERMISSIVE ``_corrupt_record``
+    errors-as-data doctrine as the CSV quarantine sink, S9); callers
+    route the quarantine side to a sink rather than losing it.
+    Implemented as ``text`` + ``from_json`` rather than the
+    DataFrameReader's PERMISSIVE ``_corrupt_record``
     column: filtering on that column requires caching the whole input
     first (SPARK-21610) — a non-starter at corpus scale — while
     ``from_json`` marks an unparseable line inside one ordinary
@@ -170,22 +170,6 @@ def read_jsonl(
         )
     )
     return good, quarantine
-
-
-def read_binary_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Opaque-binary source (images/audio/video shards) via Spark's
-    ``binaryFile`` format: (path, modificationTime, length, content).
-    The ingest edge of the multimodal pipeline — content feeds the
-    ``ops.multimodal`` decoders as a binary column. At 100 TB the
-    format's one-file-one-row layout makes file SIZE the partition
-    unit; ``maxPartitionBytes`` governs packing of small files, and the
-    pathGlobFilter prunes at listing time (never reads filtered
-    files)."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
 
 
 def jdbc_scan(

@@ -1,5 +1,5 @@
 """Spectral audio fingerprinting — the AUDIO tier of the dedup stack,
-sharing the Hamming near-dup join with ``ops/imagehash``.
+sharing the Hamming near-dup join (``ops/dedup``) with ``ops/imagehash``.
 
 ``spectral_hash64`` is the clip-level form of the Philips robust hash
 (Haitsma & Kalker, "A Highly Robust Audio Fingerprinting System",
@@ -19,10 +19,10 @@ the same bands — measured: 2x resample and 16-bit quantization are
 hash-IDENTICAL, mild noise flips ~3 bits, distinct clips sit near the
 random baseline (~32).
 
-Near-dup: ``hamming_neardup_pairs`` (ops/imagehash — pigeonhole-banded,
+Near-dup: ``hamming_neardup_pairs`` (ops/dedup — pigeonhole-banded,
 COMPLETE) over the fingerprint column; the decoders are the repo's own
-real WAV/AIFF/AU/FLAC codecs (``ops/multimodal.decode_audio_samples``),
-mp3/ogg surface as decode_status per the documented container
+real WAV/AIFF/AU codecs (``ops/multimodal.decode_audio_samples``),
+FLAC and mp3/ogg surface as decode_status per the documented
 limitation.
 
 100 TB shape: hashing is scan-bound mapInPandas over binary shards;

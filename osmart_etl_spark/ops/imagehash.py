@@ -1,9 +1,9 @@
-"""Perceptual image hashing + Hamming near-dup join — the IMAGE tier of
+"""Perceptual image and video hashing — the IMAGE tier of
 the dedup stack (the multimodal counterpart of MinHash-LSH for text and
 SRP-LSH for embeddings).
 
 Hashes (both REAL, pure numpy over the repo's own pixel decoders —
-``ops/multimodal.decode_image_pixels`` dispatches PNG/JPEG/WebP/GIF/
+``ops/multimodal.decode_image_pixels`` dispatches PNG/JPEG/GIF/
 PNM/BMP/RAS/TIFF/SGI/XBM/EXR):
 
 - ``dhash64``: 64-bit difference hash — box-resize the grayscale to
@@ -16,26 +16,18 @@ PNM/BMP/RAS/TIFF/SGI/XBM/EXR):
   threshold each coefficient against the block median. Robust to
   resizing, recompression artifacts, small crops/noise.
 
-Near-dup join: ``hamming_neardup_pairs`` — EXACT pigeonhole banding.
-Split the b-bit hash into ``max_dist + 1`` contiguous bands: any pair
-within Hamming distance ``max_dist`` differs in at most ``max_dist``
-bands, so at least ONE band matches exactly (the PassJoin/LSH-banding
-argument specialized to Hamming space). Candidates = per-band exact
-bucket join (band key extraction is shiftrightunsigned+mask codegen,
-JVM-side); verification = one ``bit_count(a XOR b)`` per candidate —
-also codegen. No quadratic stage, recall 1.0 by construction
-(tests/test_imagehash.py proves completeness against brute force;
-the ``simhash_hamming_neardup`` registry query proves it against a
-DuckDB brute-force oracle on the documents corpus).
+Near-dup join: ``ops/dedup.hamming_neardup_pairs`` — the EXACT
+pigeonhole-banded Hamming join that also serves SimHash text dedup
+(the ``simhash_hamming_neardup`` registry query proves its completeness
+against a DuckDB brute-force oracle). ``video_neardup_pairs`` runs it
+over sampled frame hashes.
 
 100 TB shape: hashing is an embarrassingly-parallel ``mapInPandas``
 over binary shards (scan-bound); the banded join shuffles ~(bands x
-corpus) 16-byte rows — the same banding cost model as MinHash-LSH,
-with the hot-bucket caveat: a band value shared by k rows yields
-k(k-1)/2 candidates, so production runs add the ``ops/dedup``
-hot-bucket cap when the corpus contains mass-duplicated flat images
-(solid colors hash identically — they ARE duplicates, but cap the
-bucket before pairing them all).
+corpus) 16-byte rows — the same banding cost model as MinHash-LSH.
+A band value shared by k rows yields k(k-1)/2 candidates, and flat
+images (solid colors) hash identically, so mass-duplicated flat
+images are best removed by exact dedup before the banded join.
 """
 
 from __future__ import annotations
@@ -171,112 +163,6 @@ def image_hashes(
     )
 
 
-def hamming_neardup_pairs(
-    hashes: DataFrame,
-    id_col: str,
-    hash_col: str,
-    *,
-    max_dist: int,
-    bits: int = 64,
-    hot_bucket_cap: int | None = None,
-) -> DataFrame:
-    """All pairs (id_a < id_b) within Hamming distance ``max_dist`` of
-    the ``bits``-bit integer ``hash_col`` — COMPLETE pigeonhole
-    banding, zero Python in the hot path.
-
-    Bands: ``max_dist + 1`` contiguous bit ranges (the last takes the
-    remainder). A pair within max_dist differs in <= max_dist bands ->
-    shares at least one band exactly -> survives the per-band bucket
-    join; bit_count verification removes the false candidates. Output:
-    (id_a, id_b, hamming).
-
-    ``hot_bucket_cap`` is the same production guard as
-    ``ops/dedup.candidate_pairs``: a band value shared by k rows
-    contributes O(k²) candidates (mass-duplicated flat images, solid
-    color bars), so buckets above the cap are excluded from pairing
-    BEFORE the self-join (bounded hot set -> broadcast anti-join).
-    Unlike probabilistic LSH bands, pigeonhole bands are the ONLY
-    recall path for pairs differing in every other band, so capping
-    genuinely trades recall on the mass-dup cluster itself — which is
-    exactly the cluster whose members exact-dedup already catches (they
-    share the full hash, any band). Default None keeps exact semantics
-    (the oracle-checked configuration).
-    """
-    if max_dist < 0:
-        raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    if not 1 <= bits <= 64:
-        raise ValueError(f"bits must be in 1..64 (bigint hash), got {bits}")
-    if max_dist + 1 > bits:
-        # width = bits // (max_dist+1) == 0 would give every non-final band
-        # an all-zero mask: one bucket per band -> a silent O(n^2) cross
-        # join replicated n_bands-1 times. Refuse instead.
-        raise ValueError(
-            f"max_dist + 1 ({max_dist + 1}) bands cannot partition {bits} bits "
-            "— need max_dist + 1 <= bits"
-        )
-    n_bands = max_dist + 1
-    width = bits // n_bands
-    band_exprs = []
-    for i in range(n_bands):
-        lo = i * width
-        w = bits - lo if i == n_bands - 1 else width
-        # w == 64 (single band over a full bigint): (1<<64)-1 overflows
-        # F.lit's bigint; -1 is the same all-ones pattern in two's
-        # complement and AND -1 is the identity.
-        mask = (1 << w) - 1 if w < 64 else -1
-        band_exprs.append(
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(F.col(hash_col), lo)
-                .bitwiseAND(F.lit(mask))
-                .alias("key"),
-            )
-        )
-    banded = hashes.select(
-        F.col(id_col), F.col(hash_col), F.explode(F.array(*band_exprs)).alias("b")
-    ).select(id_col, hash_col, F.col("b.band").alias("band"), F.col("b.key").alias("key"))
-    if hot_bucket_cap is not None:
-        # The hot set is bounded (one row per over-cap bucket), so it is
-        # materialized eagerly (localCheckpoint severs lineage; the blocks
-        # are reclaimed by the ContextCleaner when the result is dropped).
-        # `banded` itself is deliberately NOT persisted: it is a narrow
-        # projection+explode recomputed per consumer, and a persist here
-        # with no unpersist point (the result is returned lazily) would
-        # leak executor storage across calls in a long-lived session.
-        sizes = banded.groupBy("band", "key").agg(F.count(F.lit(1)).alias("__n"))
-        hot = (
-            sizes.filter(F.col("__n") > hot_bucket_cap)
-            .drop("__n")
-            .localCheckpoint(eager=True)
-        )
-        banded = banded.join(F.broadcast(hot), ["band", "key"], "left_anti")
-    a = banded.select(
-        F.col("band"),
-        F.col("key"),
-        F.col(id_col).alias("id_a"),
-        F.col(hash_col).alias("h_a"),
-    )
-    b = banded.select(
-        F.col("band"),
-        F.col("key"),
-        F.col(id_col).alias("id_b"),
-        F.col(hash_col).alias("h_b"),
-    )
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_dist)
-        .distinct()
-    )
-
-
 VIDEO_HASH_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -351,6 +237,8 @@ def video_neardup_pairs(
     hashes, run the banded Hamming join over ALL frames of all clips,
     then count distinct matching frame slots per clip pair. Output
     (id_a, id_b, n_matching_frames)."""
+    from osmart_etl_spark.ops.dedup import hamming_neardup_pairs
+
     frames = vhashes.select(
         F.col(id_col),
         F.posexplode("frame_phashes").alias("slot", "fh"),

@@ -22,7 +22,7 @@ are implemented from the public ITU-T T.81 spec:
 
 Spark-side integration is ops/multimodal._decode_image: payloads
 starting with the JPEG SOI marker decode here FOR REAL; the labeled
-deterministic fake now remains only for WebP.
+deterministic fake remains for formats with no in-repo codec (WebP).
 
 Numerics note: IDCT is float64 matrix math, rounded half-away-from-zero
 exactly once at pixel output — deterministic across platforms (no SIMD

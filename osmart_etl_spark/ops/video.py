@@ -26,14 +26,14 @@ real motion-compensation engine, not a fake.
 
 Scale notes (100 TB): decode runs per-row inside ``mapInPandas`` —
 embarrassingly parallel, no shuffle; a corrupt byte surfaces as a
-``decode_status``, never a job failure. Like the VP8L codec, declared
+``decode_status``, never a job failure. Like the image codecs, declared
 dimensions are capped (``_MAX_PIXELS`` per frame, ``_MAX_FRAMES`` per
 payload) so a few crafted header bytes cannot stall an executor on a
 multi-gigapixel allocation (the header-bomb contract from ADVICE r7).
 
 Reference parity: the reference repo (Oscar-Duque/osmart-etl) has no
 multimodal surface at all — this is extension surface for the
-training-data pipeline tier, same as ops/jpeg.py / ops/vp8l.py.
+training-data pipeline tier, same as ops/jpeg.py / ops/gif.py.
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ import struct
 
 import numpy as np
 
-# Valid-header resource caps (mirrors ops/vp8l.py's header-bomb guard):
+# Valid-header resource caps (mirrors ops/imagefmt.py's header-bomb guard):
 # a frame is at most 16 MP and a payload at most 4096 frames.
 _MAX_PIXELS = 1 << 24
 _MAX_FRAMES = 4096

@@ -990,10 +990,11 @@ def warc_parse_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     splitting, the header regexes, or the payload slicing flips
     ``length_ok`` or changes a parsed column and fails the value hash.
     All string ops are zero-shuffle codegen; a production reader runs
-    the identical expressions over ``binaryFile``-ingested WARC shards
-    (io/sources.read_binary_files) with the record split per file
-    instead of per row. ASCII corpus ⇒ strlen == octet_length on both
-    engines (the documented levenshtein-family contract).
+    the identical expressions over WARC shards read with Spark's
+    ``binaryFile`` format (one row per file, payload in ``content``)
+    with the record split per file instead of per row. ASCII corpus ⇒
+    strlen == octet_length on both engines (the documented
+    levenshtein-family contract).
     """
     d = read_table(spark, sf_dir, "documents")
     crlf = "\r\n"

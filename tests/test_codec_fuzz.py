@@ -1,4 +1,4 @@
-"""Corruption-fuzz for the round-7 codecs (gif/video/imagefmt/flac):
+"""Corruption-fuzz for the round-7 codecs (gif/video/imagefmt):
 flipping/truncating arbitrary bytes of a valid payload must yield
 either a successful decode or ValueError — never a hang, a crash, an
 IndexError, or a numpy broadcast error. This is the error contract
@@ -72,15 +72,6 @@ def test_fuzz_avi_mjpeg():
     _fuzz(decode_avi, payload, rounds=200, seed=5)
 
 
-def test_fuzz_flac():
-    from osmart_etl_spark.ops.flac import decode_flac, encode_flac
-
-    rng = np.random.default_rng(6)
-    samples = (rng.integers(-2000, 2000, (800, 2))).astype(np.int32)
-    payload = encode_flac(samples, rate=8000, bps=16)
-    _fuzz(decode_flac, payload, rounds=150, seed=7)
-
-
 @pytest.mark.parametrize("fmt", ["pnm", "bmp", "ras", "tiff", "sgi", "xbm"])
 def test_fuzz_imagefmt(fmt):
     from osmart_etl_spark.ops import imagefmt
@@ -113,7 +104,7 @@ def test_fuzz_imagefmt(fmt):
 
 
 def test_fuzz_preexisting_codecs():
-    """Same contract for the pre-round-7 codecs (JPEG, VP8L, PNG, WAV):
+    """Same contract for the pre-round-7 codecs (JPEG, PNG, WAV):
     locked in here so a future edit can't regress them."""
     rng = np.random.default_rng(1)
     img = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
@@ -124,10 +115,8 @@ def test_fuzz_preexisting_codecs():
         encode_png,
         encode_wav,
     )
-    from osmart_etl_spark.ops.vp8l import decode_webp, encode_webp
 
     _fuzz(decode_jpeg, encode_jpeg(img), rounds=200, seed=11)
-    _fuzz(decode_webp, encode_webp(img), rounds=150, seed=12)
     _fuzz(decode_png, encode_png(img), rounds=200, seed=14)
     samples = (rng.integers(-3000, 3000, (500, 2))).astype(np.int16)
     _fuzz(decode_wav, encode_wav(samples, 8000), rounds=200, seed=13)
@@ -145,7 +134,6 @@ def _sweep_truncations(decode, payload: bytes) -> None:
 
 
 def test_truncation_sweep_all_codecs():
-    from osmart_etl_spark.ops.flac import decode_flac, encode_flac
     from osmart_etl_spark.ops.gif import decode_gif, encode_gif
     from osmart_etl_spark.ops.jpeg import decode_jpeg, encode_jpeg
     from osmart_etl_spark.ops.multimodal import (
@@ -161,7 +149,6 @@ def test_truncation_sweep_all_codecs():
         encode_avi_mjpeg,
         encode_y4m,
     )
-    from osmart_etl_spark.ops.vp8l import decode_webp, encode_webp
 
     rng = np.random.default_rng(42)
     img = rng.integers(0, 256, (8, 6, 3), dtype=np.uint8)
@@ -169,12 +156,10 @@ def test_truncation_sweep_all_codecs():
     _sweep_truncations(decode_gif, encode_gif([rng.integers(0, 8, (8, 6), dtype=np.uint8)], pal))
     _sweep_truncations(decode_jpeg, encode_jpeg(img))
     _sweep_truncations(decode_png, encode_png(img))
-    _sweep_truncations(decode_webp, encode_webp(img))
     _sweep_truncations(imagefmt.decode_pnm, imagefmt.encode_pnm(img))
     _sweep_truncations(imagefmt.decode_bmp, imagefmt.encode_bmp(img))
     _sweep_truncations(imagefmt.decode_exr, imagefmt.encode_exr(rng.random((4, 3, 3), dtype=np.float32), ["B", "G", "R"]))
     samples = (rng.integers(-2000, 2000, (64, 2))).astype(np.int32)
-    _sweep_truncations(decode_flac, encode_flac(samples, rate=8000, bps=16))
     _sweep_truncations(decode_wav, encode_wav(samples.astype(np.int16), 8000))
     frames = [
         (

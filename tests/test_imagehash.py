@@ -1,22 +1,21 @@
-"""Perceptual image hashing + Hamming banding (ops/imagehash) — the
-image tier of the dedup stack. Hash robustness is tested on real
-encoded images (PNG/PNM via the repo's own codecs), banding
-completeness against brute force, and the Spark surface end-to-end
-with per-row decode failures."""
+"""Perceptual image hashing (ops/imagehash) — the image tier of the
+dedup stack. Hash robustness is tested on real encoded images (PNG/PNM
+via the repo's own codecs), the Spark surface end-to-end with per-row
+decode failures, and frame-sampled video near-dup pairing over the
+Hamming-banded join (its completeness is tested in
+tests/test_soft_dedup.py)."""
 
 from __future__ import annotations
 
 import pytest
 
-import random
-
 import numpy as np
 
+from osmart_etl_spark.ops.dedup import hamming_neardup_pairs
 from osmart_etl_spark.ops.imagehash import (
     box_resize,
     dhash64,
     hamming64,
-    hamming_neardup_pairs,
     image_hashes,
     phash64,
 )
@@ -62,39 +61,6 @@ def test_distinct_images_are_far():
     # different structure -> hashes far apart (random baseline is 32)
     assert hamming64(phash64(a), phash64(b)) >= 16
     assert hamming64(dhash64(a), dhash64(b)) >= 16
-
-
-def test_banding_completeness_vs_brute_force(spark):
-    """Pigeonhole banding must find EVERY pair within max_dist — seeded
-    random 64-bit hashes plus planted near-dup clusters, compared
-    against the O(n²) definition."""
-    rng = random.Random(42)
-    rows = []
-    base_hashes = [rng.getrandbits(64) for _ in range(60)]
-    hid = 0
-    for h in base_hashes:
-        rows.append((hid, h - (1 << 64) if h >= 1 << 63 else h))
-        hid += 1
-        if rng.random() < 0.4:  # planted near-dup: flip <=3 bits
-            flipped = h
-            for _ in range(rng.randint(0, 3)):
-                flipped ^= 1 << rng.randrange(64)
-            rows.append(
-                (hid, flipped - (1 << 64) if flipped >= 1 << 63 else flipped)
-            )
-            hid += 1
-    df = spark.createDataFrame(rows, "id bigint, h bigint")
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in hamming_neardup_pairs(df, "id", "h", max_dist=3).collect()
-    }
-    want = set()
-    for i, (ia, ha) in enumerate(rows):
-        for ib, hb in rows[i + 1 :]:
-            d = bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
-            if d <= 3:
-                want.add((min(ia, ib), max(ia, ib), d))
-    assert got == want and len(want) > 0
 
 
 @pytest.mark.slow
@@ -193,57 +159,6 @@ def test_video_phash_neardup(spark):
     }
     assert (0, 1) in pairs and pairs[(0, 1)] >= 3
     assert (0, 2) not in pairs and (1, 2) not in pairs
-
-
-@pytest.mark.slow
-def test_hot_bucket_cap_excludes_mass_dup_buckets(spark):
-    """hot_bucket_cap drops over-common band buckets before pairing:
-    the planted mass-dup cluster (identical hashes — exact dedup's job)
-    disappears from the banded candidates, genuinely-near pairs with a
-    quiet band survive, and cap=None stays complete."""
-    from osmart_etl_spark.ops.imagehash import hamming_neardup_pairs
-
-    rows = [(i, 0) for i in range(50)]  # mass-dup: 50 identical hashes
-    # a near pair far from the hot cluster (bit 40 apart)
-    a = (1 << 50) | (1 << 20)
-    rows += [(100, a), (101, a ^ (1 << 40))]
-    df = spark.createDataFrame(rows, "id bigint, h bigint")
-
-    capped = {
-        (r.id_a, r.id_b)
-        for r in hamming_neardup_pairs(
-            df, "id", "h", max_dist=3, hot_bucket_cap=10
-        ).collect()
-    }
-    # the hot all-zero buckets (shared by the 50 mass-dups AND by the
-    # pair's zero bands) are excluded, but the pair still collides in
-    # its QUIET nonzero band (bit 20's band, identical on both sides),
-    # so the cap removes exactly the mass-dup cluster's O(k²) pairs and
-    # nothing else
-    assert capped == {(100, 101)}
-    full = {
-        (r.id_a, r.id_b)
-        for r in hamming_neardup_pairs(df, "id", "h", max_dist=3).collect()
-    }
-    assert (100, 101) in full  # uncapped stays complete
-    assert sum(1 for i, j in full if i < 50 and j < 50) == 50 * 49 // 2
-
-
-def test_hamming_neardup_rejects_degenerate_banding(spark):
-    """max_dist+1 > bits would make width 0 (all-zero masks → one bucket
-    per band → silent O(n²) cross join); must raise at entry, as must
-    bits outside 1..64 and negative max_dist (round-11 ADVICE)."""
-    import pytest
-
-    from osmart_etl_spark.ops.imagehash import hamming_neardup_pairs
-
-    df = spark.createDataFrame([(1, 0), (2, 1)], "id bigint, h bigint")
-    with pytest.raises(ValueError, match="bands cannot partition"):
-        hamming_neardup_pairs(df, "id", "h", max_dist=8, bits=4)
-    with pytest.raises(ValueError, match="bits"):
-        hamming_neardup_pairs(df, "id", "h", max_dist=3, bits=65)
-    with pytest.raises(ValueError, match="max_dist"):
-        hamming_neardup_pairs(df, "id", "h", max_dist=-1)
 
 
 def test_video_neardup_handles_negative_and_large_clip_ids(spark):

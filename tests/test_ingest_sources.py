@@ -1,13 +1,11 @@
-"""JSONL-with-quarantine and binaryFile ingest sources (the crawl
-pipeline's entry edges)."""
+"""JSONL-with-quarantine ingest source (the crawl pipeline's entry
+edge)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from osmart_etl_spark.io.sources import read_binary_files, read_jsonl
+from osmart_etl_spark.io.sources import read_jsonl
 
 DOC_SCHEMA = StructType(
     [
@@ -41,28 +39,3 @@ def test_read_jsonl_splits_good_and_corrupt(spark, tmp_path):
     )
     # nothing silently dropped: good + quarantine == input lines
     assert len(g) + len(q) == len(lines)
-
-
-def test_read_binary_files_content_and_glob(spark, tmp_path):
-    (tmp_path / "a.bin").write_bytes(b"\x89PNG\r\n\x1a\nfakepayload")
-    (tmp_path / "b.bin").write_bytes(b"RIFFxxxxWAVE")
-    (tmp_path / "skip.txt").write_text("not binary shard")
-
-    df = read_binary_files(spark, str(tmp_path), glob="*.bin")
-    rows = {os.path.basename(r.path): r for r in df.collect()}
-    assert set(rows) == {"a.bin", "b.bin"}
-    assert bytes(rows["a.bin"].content).startswith(b"\x89PNG")
-    assert rows["b.bin"].length == 12
-
-
-def test_binary_files_feed_multimodal_decode(spark, tmp_path):
-    """The ingest edge composes with the decoder surface: a real
-    (generated in-test) PBM image read via binaryFile decodes ok."""
-    from osmart_etl_spark.ops.imagefmt import decode_pnm
-
-    pbm = b"P1\n3 2\n1 0 1\n0 1 0\n"
-    (tmp_path / "img.pbm").write_bytes(pbm)
-    df = read_binary_files(spark, str(tmp_path), glob="*.pbm")
-    content = bytes(df.collect()[0].content)
-    img = decode_pnm(content)
-    assert img.shape[:2] == (2, 3)

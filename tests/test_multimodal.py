@@ -612,24 +612,6 @@ def test_jpeg_corrupt_payloads_valueerror_only_and_fast():
     assert time.time() - t_start < 30.0
 
 
-def test_webp_corrupt_payload_is_decode_error_not_fake(spark):
-    """Round 7: lossy VP8 decodes FOR REAL (ops/vp8.py), so a webp
-    payload is never routed to the fake decoder — a corrupt VP8 chunk
-    surfaces as decode_error (honest failure), and the fake_decoder
-    status is reserved for formats with no in-repo codec (non-WAV
-    audio). Real-lossy-webp 'ok' coverage lives in tests/test_vp8.py."""
-    from osmart_etl_spark.ops.multimodal import MEDIA_SCHEMA, extract_features
-
-    body = b"WEBPVP8 " + bytes([24]) + bytes(range(39))
-    payload = b"RIFF" + len(body).to_bytes(4, "little") + body
-    media = spark.createDataFrame(
-        [(1, "image", payload, len(payload), 8, 8, None)], MEDIA_SCHEMA
-    )
-    rows = extract_features(media).collect()
-    assert rows[0]["decode_status"] == "decode_error"
-    assert rows[0]["feature"] is None
-
-
 def test_png_adam7_interlace_roundtrip():
     """Hand-muxed Adam7 PNG (7 independently-filtered passes) must
     decode to the same pixels as the non-interlaced encoding — the

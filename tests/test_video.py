@@ -1,7 +1,7 @@
 """Video container decoders (ops/video.py): Y4M and AVI/MJPEG.
 
 Validation strategy (no ffmpeg in the container, same tiering as the
-JPEG/VP8L/FLAC codecs):
+JPEG codec):
 - Y4M: encode→decode plane identity across all supported colorspaces,
   plus hand-computed BT.601 conversion anchors (black/white/red).
 - AVI/MJPEG: frames wrapped by the fixture muxer must decode to the
