@@ -28,7 +28,11 @@ composes with a later ledger release.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 _LEDGER: list[tuple[str | None, DataFrame]] = []
 _CURRENT: str | None = None
@@ -51,6 +55,20 @@ def led_register(df: DataFrame) -> DataFrame:
     return df
 
 
+def _release(df: DataFrame) -> None:
+    """Unpersist one ledger entry. A frame whose SparkContext is stopped
+    holds no blocks any more, so it is skipped; any other failure is
+    logged and the release goes on, so one bad entry cannot strand the
+    rest of the ledger."""
+    sc = getattr(df.sparkSession, "_sc", None)
+    if sc is not None and sc._jsc is None:
+        return
+    try:
+        df.unpersist()
+    except Exception:  # noqa: BLE001 — logged; the other entries still release
+        log.warning("cache ledger: unpersist failed", exc_info=True)
+
+
 def begin_query(name: str) -> None:
     """Called by the ``@query`` decorator at build start: release every
     ledger entry belonging to a DIFFERENT query, keep this query's own.
@@ -69,10 +87,7 @@ def begin_query(name: str) -> None:
     kept = [(tag, df) for tag, df in _LEDGER if tag == name]
     for tag, df in _LEDGER:
         if tag != name:
-            try:
-                df.unpersist()
-            except Exception:  # a stopped SparkContext must not mask errors
-                pass
+            _release(df)
     _LEDGER[:] = kept
 
 
@@ -81,10 +96,7 @@ def release_persisted() -> int:
     entries were released."""
     n = len(_LEDGER)
     while _LEDGER:
-        try:
-            _LEDGER.pop()[1].unpersist()
-        except Exception:  # a stopped SparkContext must not mask errors
-            pass
+        _release(_LEDGER.pop()[1])
     return n
 
 

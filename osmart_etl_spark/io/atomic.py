@@ -74,10 +74,34 @@ class ConcurrentCommitError(RuntimeError):
     Re-read and retry the whole operation."""
 
 
+#: (JavaSparkContext, Hadoop ``Path`` class, Hadoop Configuration) of the
+#: live SparkContext. Resolving ``jvm.org.apache.hadoop.fs.Path`` is five
+#: py4j reflection round trips and a data tick builds hundreds of Paths,
+#: so the class is resolved once per context; a new SparkContext (after
+#: ``stop()``, or on a relaunched gateway) has a new ``_jsc`` and
+#: re-resolves.
+_HADOOP: tuple | None = None
+
+
+def _hadoop(spark: SparkSession) -> tuple:
+    global _HADOOP
+    jsc = spark._jsc
+    cached = _HADOOP
+    if cached is None or cached[0] is not jsc:
+        cached = (jsc, spark._jvm.org.apache.hadoop.fs.Path, jsc.hadoopConfiguration())
+        _HADOOP = cached
+    return cached
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """``org.apache.hadoop.fs.Path(path)`` on the live SparkContext's JVM."""
+    return _hadoop(spark)[1](path)
+
+
 def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+    _, path_cls, conf = _hadoop(spark)
+    hpath = path_cls(path)
+    return spark._jvm, hpath.getFileSystem(conf), hpath
 
 
 #: Filesystems whose ``create(path, overwrite=False)`` is a real atomic
@@ -91,7 +115,7 @@ def _assert_atomic_create_scheme(spark: SparkSession, scheme: str) -> None:
     exclusive-create site (commit locks, layout sidecars)."""
     if scheme in _ATOMIC_CREATE_SCHEMES:
         return
-    conf = spark._jsc.hadoopConfiguration()
+    conf = _hadoop(spark)[2]
     attested = conf.getBoolean("osmart.etl.assume.atomic.create", False) or (
         scheme == "s3a"
         and conf.getBoolean("fs.s3a.create.conditional.enabled", False)
@@ -129,7 +153,7 @@ def _exclusive_create(spark: SparkSession, path: str) -> None:
     ``osmart.etl.assume.atomic.create=true`` escape hatch for stores
     with conditional-create semantics (ABFS etag-gated create, GCS
     preconditions)."""
-    jvm, fs, hpath = _fs(spark, path)
+    _, fs, hpath = _fs(spark, path)
     scheme = fs.getUri().getScheme()
     if scheme == "file":
         local = hpath.toUri().getPath()
@@ -165,28 +189,33 @@ def _write_small_json(
     ``_read_small_text``; sort_keys for byte-stable artifacts)."""
     import json as _json
 
-    jvm, fs, hpath = _fs(spark, path)
+    _, fs, hpath = _fs(spark, path)
     out = fs.create(hpath, overwrite)
     out.write(bytearray(_json.dumps(obj, sort_keys=True).encode()))
     out.close()
 
 
 def _listdir(spark: SparkSession, path: str) -> list[str]:
-    jvm, fs, hpath = _fs(spark, path)
+    _, fs, hpath = _fs(spark, path)
     if not fs.exists(hpath):
         return []
     return [st.getPath().getName() for st in fs.listStatus(hpath)]
 
 
+def _parse_commit_log(names: list[str]) -> list[tuple[int, str]]:
+    """(seq, token) pairs from a ``_commits`` listing, ascending.
+    Non-conforming names (e.g. a crashed publisher's temp marker) are
+    ignored."""
+    return sorted(
+        (int(m.group(1)), m.group(2))
+        for m in (_MARKER_RE.match(n) for n in names)
+        if m
+    )
+
+
 def _commit_log(spark: SparkSession, table: str) -> list[tuple[int, str]]:
-    """(seq, token) pairs from the commit log, ascending. Non-conforming
-    names (e.g. a crashed publisher's temp marker) are ignored."""
-    out = []
-    for name in _listdir(spark, f"{table.rstrip('/')}/_commits"):
-        m = _MARKER_RE.match(name)
-        if m:
-            out.append((int(m.group(1)), m.group(2)))
-    return sorted(out)
+    """(seq, token) pairs from the commit log, ascending."""
+    return _parse_commit_log(_listdir(spark, f"{table.rstrip('/')}/_commits"))
 
 
 def current_version(spark: SparkSession, table: str) -> tuple[int, str] | None:
@@ -195,10 +224,14 @@ def current_version(spark: SparkSession, table: str) -> tuple[int, str] | None:
     return log[-1] if log else None
 
 
-def read_committed(spark: SparkSession, table: str, at: int | None = None) -> DataFrame:
+def read_committed(
+    spark: SparkSession, table: str, at: int | None = None, *, schema=None
+) -> DataFrame:
     """Read the latest committed version (or, with ``at``, a retained
     historical sequence — bounded time travel for free from the
-    immutable-version layout)."""
+    immutable-version layout). ``schema`` (a StructType) reads the
+    version directory with it instead of inferring one, which saves the
+    footer-reading Spark job that inference runs."""
     log = _commit_log(spark, table)
     if not log:
         raise FileNotFoundError(f"no committed version at {table}")
@@ -212,7 +245,8 @@ def read_committed(spark: SparkSession, table: str, at: int | None = None) -> Da
                 f"(have {[s for s, _ in log]})"
             )
         seq, token = match[0]
-    return spark.read.parquet(f"{table.rstrip('/')}/_v-{token}")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(f"{table.rstrip('/')}/_v-{token}")
 
 
 def commit_version(
@@ -286,17 +320,17 @@ def publish_staged(
     already be complete — a crash before this call leaves the live
     table untouched and the orphan swept later."""
     base = table.rstrip("/")
-    jvm, fs, _ = _fs(spark, base)
+    _, fs, _ = _fs(spark, base)
 
     log = _commit_log(spark, base)
     last_seq = log[-1][0] if log else 0
     if expected_seq is not None and last_seq != expected_seq:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/_v-{token}"), True)
+        fs.delete(hadoop_path(spark, f"{base}/_v-{token}"), True)
         raise ConcurrentCommitError(
             f"{base}: derived from seq {expected_seq} but log is at {last_seq}"
         )
     commits_dir = f"{base}/_commits"
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(commits_dir))
+    fs.mkdirs(hadoop_path(spark, commits_dir))
     if expected_seq is not None:
         # CAS path: claim EXACTLY expected_seq + 1. Claiming any later
         # number would reopen the skip-ahead hole (round-7 fix): a racer
@@ -338,7 +372,7 @@ def publish_staged(
         _exclusive_create(spark, f"{commits_dir}/{next_seq:08d}.lock")
     except FileExistsError as exc:
         # a racer (or a crashed claimant) holds next_seq
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/_v-{token}"), True)
+        fs.delete(hadoop_path(spark, f"{base}/_v-{token}"), True)
         raise ConcurrentCommitError(
             f"{base}: lost publish race for seq {next_seq}"
         ) from exc
@@ -350,7 +384,7 @@ def publish_staged(
     # between claim and marker leaves a dead claim: invisible to
     # readers (resolution walks markers only), never reused by writers
     # (see next_seq above), swept by GC once stale.
-    final = jvm.org.apache.hadoop.fs.Path(f"{commits_dir}/{next_seq:08d}-{token}")
+    final = hadoop_path(spark, f"{commits_dir}/{next_seq:08d}-{token}")
     fs.create(final, True).close()
 
     # The commit is durable from here. GC is best-effort: any residual
@@ -384,14 +418,18 @@ def _gc(
     unconditionally."""
     import time
 
-    jvm, fs, _ = _fs(spark, base)
-    log = _commit_log(spark, base)
+    _, fs, _ = _fs(spark, base)
+    # ONE listing of the commit log serves both the retention horizon
+    # and the marker/lock sweep below. A marker published after this
+    # snapshot is not in it, so the sweep never touches it.
+    commit_names = _listdir(spark, f"{base}/_commits")
+    log = _parse_commit_log(commit_names)
     committed = {token for _, token in log}
     live = {token for _, token in log[-keep_versions:]}
     horizon_ms = (time.time() - orphan_ttl_s) * 1000.0
 
     def _old_enough(path: str) -> bool:
-        p = jvm.org.apache.hadoop.fs.Path(path)
+        p = hadoop_path(spark, path)
         try:
             return fs.getFileStatus(p).getModificationTime() <= horizon_ms
         except Exception:  # noqa: BLE001 — racing GC already removed it
@@ -408,25 +446,25 @@ def _gc(
             continue
         full = f"{base}/{name}"
         if name[3:] in committed or _old_enough(full):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(full), True)
+            fs.delete(hadoop_path(spark, full), True)
     marker_seqs = {seq for seq, _ in log}
-    for name in _listdir(spark, f"{base}/_commits"):
+    for name in commit_names:
         full = f"{base}/_commits/{name}"
         m = _MARKER_RE.match(name)
         lk = _LOCK_RE.match(name)
         if m and m.group(2) not in live:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(full), False)
+            fs.delete(hadoop_path(spark, full), False)
         elif lk and (int(lk.group(1)) in marker_seqs or _old_enough(full)):
             # a lock whose marker exists is a resolved claim; a stale
             # markerless lock is a dead claim (TTL-gated: inside the
             # TTL it may be a live writer between claim and marker)
-            fs.delete(jvm.org.apache.hadoop.fs.Path(full), False)
+            fs.delete(hadoop_path(spark, full), False)
         elif not m and not lk and name != _MIGRATION_SENTINEL and _old_enough(full):
             # foreign debris (e.g. an editor/tool temp file) — swept on
             # the same TTL so resolution listings stay small (the
             # migration sentinel is exempt: it must survive arbitrarily
             # long crash gaps so the legacy sweep can resume)
-            fs.delete(jvm.org.apache.hadoop.fs.Path(full), False)
+            fs.delete(hadoop_path(spark, full), False)
 
 
 def read_sidecar(spark: SparkSession, table: str) -> dict | None:
@@ -439,9 +477,9 @@ def read_sidecar(spark: SparkSession, table: str) -> dict | None:
     cur = current_version(spark, base)
     if cur is None:
         return None
-    jvm, fs, _ = _fs(spark, base)
+    _, fs, _ = _fs(spark, base)
     p = f"{base}/_v-{cur[1]}/_sidecar.json"
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(p)):
+    if not fs.exists(hadoop_path(spark, p)):
         return None
     return _json.loads(_read_small_text(spark, p))
 
@@ -485,7 +523,7 @@ def upsert_versioned(
 
     base = table.rstrip("/")
     cur = current_version(spark, base)
-    jvm, fs, _ = _fs(spark, base)
+    _, fs, _ = _fs(spark, base)
     if cur is None:
         # Round-9 (ADVICE): the adoption/create path CAS-claims exactly
         # lock 00000001, and _gc — the only thing that TTL-sweeps a
@@ -498,11 +536,11 @@ def upsert_versioned(
         # unwedges itself.
         _gc(spark, base, keep_versions, 3600.0)
     legacy = [n for n in _listdir(spark, base) if not n.startswith(("_", "."))]
-    sentinel = jvm.org.apache.hadoop.fs.Path(f"{base}/_commits/{_MIGRATION_SENTINEL}")
+    sentinel = hadoop_path(spark, f"{base}/_commits/{_MIGRATION_SENTINEL}")
 
     def _sweep_legacy() -> None:
         for n in legacy:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/{n}"), True)
+            fs.delete(hadoop_path(spark, f"{base}/{n}"), True)
 
     if cur is None:
         if legacy:
@@ -512,7 +550,7 @@ def upsert_versioned(
             # deleted after the merged version is durably committed
             old = spark.read.parquet(base)
             merged = upsert_keep_latest(old, new, keys, order_col)
-            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{base}/_commits"))
+            fs.mkdirs(hadoop_path(spark, f"{base}/_commits"))
             fs.create(sentinel, True).close()
             seq = commit_version(
                 spark, merged, base, expected_seq=0,

@@ -152,6 +152,8 @@ def compact(
     """
     import math
 
+    from osmart_etl_spark.io.atomic import _fs, hadoop_path
+
     df = spark.read.parquet(path)
     files_before = df.select(F.input_file_name()).distinct().count()
     n_rows = df.count()
@@ -164,12 +166,9 @@ def compact(
     tmp, bak = base + "__compact_tmp", base + "__compact_bak"
     out.write.mode("overwrite").parquet(tmp)
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(base)
-    fs = hpath.getFileSystem(hconf)
-    p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    p_bak = jvm.org.apache.hadoop.fs.Path(bak)
+    _, fs, hpath = _fs(spark, base)
+    p_tmp = hadoop_path(spark, tmp)
+    p_bak = hadoop_path(spark, bak)
     fs.delete(p_bak, True)
     if not fs.rename(hpath, p_bak):
         raise IOError(f"compact: could not move {base} aside to {bak}")

@@ -160,7 +160,7 @@ def merge_upsert_partitioned(
     """
     import uuid
 
-    from osmart_etl_spark.io.atomic import _fs, publish_staged
+    from osmart_etl_spark.io.atomic import _fs, hadoop_path, publish_staged
     from osmart_etl_spark.io.sources import path_exists
 
     base = path.rstrip("/")
@@ -319,13 +319,12 @@ def merge_upsert_partitioned(
         .partitionBy(bucket_col)
         .parquet(stage)
     )
-    jvm, fs, _ = _fs(spark, base)
-    Path = jvm.org.apache.hadoop.fs.Path
+    _, fs, hbase = _fs(spark, base)
     # sweep crashed-writer staging debris (>1h old) — same TTL doctrine
     # as io/atomic._gc; never touches the current token's stage
     import time as _time
 
-    for st in fs.listStatus(Path(base)):
+    for st in fs.listStatus(hbase):
         nm = st.getPath().getName()
         if (
             nm.startswith("_stage-")
@@ -335,13 +334,14 @@ def merge_upsert_partitioned(
             fs.delete(st.getPath(), True)
     for b in touched:
         bdir = f"{base}/bucket={b}"
-        fs.mkdirs(Path(bdir))
+        fs.mkdirs(hadoop_path(spark, bdir))
         if not fs.rename(
-            Path(f"{stage}/{bucket_col}={b}"), Path(f"{bdir}/_v-{token}")
+            hadoop_path(spark, f"{stage}/{bucket_col}={b}"),
+            hadoop_path(spark, f"{bdir}/_v-{token}"),
         ):
             raise IOError(f"staging rename failed for bucket {b} under {base}")
         publish_staged(spark, bdir, token, expected_seq=snapshots[b][1])
-    fs.delete(Path(stage), True)
+    fs.delete(hadoop_path(spark, stage), True)
     return touched
 
 
@@ -432,11 +432,16 @@ def _adopt_legacy_buckets(
 
     Returns the adopted bucket ids.
     """
-    from osmart_etl_spark.io.atomic import _fs, commit_version, current_version
+    from osmart_etl_spark.io.atomic import (
+        _fs,
+        commit_version,
+        current_version,
+        hadoop_path,
+    )
 
     legacy = _legacy_bucket_dirs(spark, base, bucket_col)
-    jvm, fs, _ = _fs(spark, base)
-    sentinel = jvm.org.apache.hadoop.fs.Path(f"{base}/{_LEGACY_SENTINEL}")
+    _, fs, _ = _fs(spark, base)
+    sentinel = hadoop_path(spark, f"{base}/{_LEGACY_SENTINEL}")
     if not legacy:
         # crash window: all buckets adopted+swept, sentinel not yet removed
         if fs.exists(sentinel):
@@ -470,7 +475,7 @@ def _adopt_legacy_buckets(
             # files; underscore/dot entries (the versioned layout) stay.
             _sweep_plain_entries(spark, d)
         else:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
+            fs.delete(hadoop_path(spark, d), True)
     # Crash-resume closure for the d == bdir shape: once commit_version
     # ran, the dir has a _commits log, so _legacy_bucket_dirs never
     # returns it again and its plain files would linger forever. While
@@ -491,12 +496,12 @@ def _adopt_legacy_buckets(
 def _sweep_plain_entries(spark: SparkSession, d: str) -> None:
     """Delete the non-underscore/non-dot entries of one directory,
     leaving the versioned layout (_v-*, _commits, markers) intact."""
-    from osmart_etl_spark.io.atomic import _fs, _listdir
+    from osmart_etl_spark.io.atomic import _fs, _listdir, hadoop_path
 
-    jvm, fs, _ = _fs(spark, d)
+    _, fs, _ = _fs(spark, d)
     for name in _listdir(spark, d):
         if not name.startswith(("_", ".")):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{d}/{name}"), True)
+            fs.delete(hadoop_path(spark, f"{d}/{name}"), True)
 
 
 def _bucket_snapshot(
@@ -505,11 +510,9 @@ def _bucket_snapshot(
     """(current committed version dir or None, committed seq — 0 for a
     never-written bucket) of one bucket."""
     from osmart_etl_spark.io.atomic import current_version
-    from osmart_etl_spark.io.sources import path_exists
 
     bdir = f"{base}/bucket={bucket}"
-    if not path_exists(spark, bdir):
-        return None, 0
+    # a missing bucket's commit log lists empty, so it reads as (None, 0)
     cur = current_version(spark, bdir)
     return (None, 0) if cur is None else (f"{bdir}/_v-{cur[1]}", cur[0])
 
@@ -536,7 +539,7 @@ def _write_layout_exclusive(spark: SparkSession, layout_path: str, layout: dict)
     from osmart_etl_spark.io.atomic import _assert_atomic_create_scheme
 
     data = _json.dumps(layout, sort_keys=True)
-    jvm, fs, hpath = _fs(spark, layout_path)
+    _, fs, hpath = _fs(spark, layout_path)
     fs.mkdirs(hpath.getParent())
     if fs.getUri().getScheme() != "file":
         # same CAS-atomicity rule as io/atomic's commit locks: refuse
@@ -593,7 +596,7 @@ def _read_layout(
 
     from osmart_etl_spark.io.atomic import _fs
 
-    jvm, fs, hpath = _fs(spark, layout_path)
+    _, fs, hpath = _fs(spark, layout_path)
     row = None
     saw_empty_file = False
     for _ in range(100):
@@ -668,7 +671,7 @@ def read_merge_table(spark: SparkSession, path: str, bucket_col: str = "__bucket
     it already absorbed the legacy rows — when the migration sentinel
     attests that, and raises otherwise (same ambiguity rule as the
     writer's adoption)."""
-    from osmart_etl_spark.io.atomic import _fs, _listdir
+    from osmart_etl_spark.io.atomic import _fs, _listdir, hadoop_path
     from osmart_etl_spark.io.sources import path_exists
 
     base = path.rstrip("/")
@@ -688,8 +691,8 @@ def read_merge_table(spark: SparkSession, path: str, bucket_col: str = "__bucket
                 overlap.append(b)
                 dirs.remove(legacy[b])  # committed version supersedes
     if overlap:
-        jvm, fs, _ = _fs(spark, base)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{base}/{_LEGACY_SENTINEL}")):
+        _, fs, _ = _fs(spark, base)
+        if not fs.exists(hadoop_path(spark, f"{base}/{_LEGACY_SENTINEL}")):
             raise RuntimeError(
                 f"{base}: buckets {sorted(overlap)} have both a committed version "
                 "and a plain legacy dir with no migration sentinel — run "
@@ -1059,12 +1062,13 @@ def merge_accumulate_versioned(
         _gc,
         _write_small_json,
         current_version,
+        hadoop_path,
         publish_staged,
     )
 
     base = table.rstrip("/")
     partial, acc_types = _additive_partial(updates, keys, sum_cols, max_cols)
-    jvm, fs, _ = _fs(spark, base)
+    _, fs, _ = _fs(spark, base)
 
     if isinstance(batch_id, tuple):
         writer_id, seq = str(batch_id[0]), int(batch_id[1])
@@ -1128,7 +1132,7 @@ def merge_accumulate_versioned(
             # bounded attempts. PUBLISH is deliberately OUTSIDE this
             # except: once the commit marker may exist, cleanup here
             # would delete a published version's data.
-            fs.delete(jvm.org.apache.hadoop.fs.Path(stage), True)
+            fs.delete(hadoop_path(spark, stage), True)
             if attempt == max_retries - 1:
                 raise
         else:

@@ -54,10 +54,10 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     with only the new batch, or reset a watermark and re-extract
     duplicates.
     """
+    from osmart_etl_spark.io.atomic import _fs
+
     try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        _, fs, hpath = _fs(spark, path)
         return bool(fs.exists(hpath))
     except AttributeError:
         # Spark Connect session: no _jvm/_jsc gateway. Probe by asking the

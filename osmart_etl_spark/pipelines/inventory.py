@@ -11,9 +11,15 @@ calendar scaffold → SOD → sparse change-points, upsert into the points
 table, advance the date watermark (update_stock_points.py).
 
 Both run as single Catalyst DAGs; the per-store loop of the reference is
-a partition column. Sink layout: the raw log partitions by event date so
-incremental reads prune to the slice (the Spark analogue of the
-reference's (art_id,tienda_id,fecha) index, §4).
+a partition column. Sink layout: the raw log partitions by event date
+(``fecha_dia=<day>``, the Spark analogue of the reference's
+(art_id,tienda_id,fecha) index, §4). EP3's incremental read lists the
+raw-log root once and reads only the day partitions that can hold rows
+past its date watermark (every day from the one before the watermark
+day on: slack for a session timezone that differs from the writer's),
+then re-filters ``to_date(fecha) > watermark`` exactly. A tick whose slice is
+empty ends after that one aggregate: no replay, no prior-points read,
+no checkpoint, no publish.
 """
 
 from __future__ import annotations
@@ -23,7 +29,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from osmart_etl_spark.io.atomic import read_committed, upsert_versioned
+from osmart_etl_spark.io.atomic import _listdir, read_committed, upsert_versioned
 from osmart_etl_spark.io.sinks import write_append
 from osmart_etl_spark.ops.windows import (
     REPLAY_TASK_ROW_BUDGET,
@@ -34,6 +40,13 @@ from osmart_etl_spark.ops.windows import (
 from osmart_etl_spark.streaming.incremental import WatermarkStore, run_incremental
 
 LATE_BUFFER_SECONDS = 1  # T2 — update_raw_stock_movements.py:69
+RAW_DAY_PARTITION = "fecha_dia"
+#: Day partitions read below EP3's watermark day. ``fecha_dia`` is named
+#: under the writing session's timezone and the re-filter runs under the
+#: reader's. Two zones differ by at most 26 hours, so one timestamp's two
+#: dates differ by at most two days, and a row dated after the watermark
+#: day by the reader lies on disk no lower than the day before it.
+RAW_DAY_SLACK = 1
 
 
 def normalize_movements(events: DataFrame) -> DataFrame:
@@ -88,9 +101,9 @@ def run_raw_movements_incremental(
 
     def load(batch: DataFrame) -> None:
         write_append(
-            batch.withColumn("fecha_dia", F.to_date("fecha")),
+            batch.withColumn(RAW_DAY_PARTITION, F.to_date("fecha")),
             raw_log_path,
-            partition_by=("fecha_dia",),
+            partition_by=(RAW_DAY_PARTITION,),
         )
 
     def wm(batch: DataFrame):
@@ -101,6 +114,37 @@ def run_raw_movements_incremental(
         spark, store=store, pipeline="raw_movements", source_name=store_name,
         extract=extract, load=load, wm_expr=wm,
     )
+
+
+def read_raw_log_since(
+    spark: SparkSession, raw_log_path: str, last: str | None
+) -> DataFrame | None:
+    """The raw log, pruned to the day partitions that can hold a row with
+    ``to_date(fecha) > last``: days from ``last - RAW_DAY_SLACK`` on, found
+    by one listing of the root and read with ``basePath`` so ``fecha_dia``
+    stays a column. The caller keeps the exact re-filter. ``last`` None
+    reads every day; None is returned when no partition qualifies. A
+    root with no day partitions at all is read whole, so a missing raw
+    log fails as loudly as an unpruned read."""
+    if last is None:
+        return spark.read.parquet(raw_log_path)
+    root = raw_log_path.rstrip("/")
+    first = dt.date.fromisoformat(last[:10]) - dt.timedelta(days=RAW_DAY_SLACK)
+    prefix = f"{RAW_DAY_PARTITION}="
+    days = [n for n in _listdir(spark, root) if n.startswith(prefix)]
+    if not days:
+        return spark.read.parquet(raw_log_path)
+    keep = []
+    for name in days:
+        try:
+            day = dt.date.fromisoformat(name[len(prefix):])
+        except ValueError:
+            continue  # the null-date partition: `> last` drops its rows
+        if day >= first:
+            keep.append(f"{root}/{name}")
+    if not keep:
+        return None
+    return spark.read.option("basePath", root).parquet(*keep)
 
 
 def _ep3_chunk_weeks():
@@ -215,6 +259,14 @@ def run_stock_points_incremental(
     """EP3: compute/refresh stock points from movements past the date
     watermark, upsert on (art_id, point_date).
 
+    The slice is read from the raw-log day partitions at or after the
+    watermark day less ``RAW_DAY_SLACK`` (``read_raw_log_since``) and
+    re-filtered to ``to_date(fecha) > watermark``. One aggregate over it
+    yields the new watermark and the key histogram; when it finds no
+    rows, the run ends there — ``compute_stock_points``, the prior-points
+    read, the checkpoint and the publish are all skipped, so a no-op
+    tick writes nothing and publishes no version.
+
     ``jdbc`` = {"url", "table", "driver"} (optional): ALSO land the
     refreshed points in a live relational table via the staged MERGE —
     the reference's actual EP3 sink (temp-staging bulk upsert into
@@ -239,7 +291,9 @@ def run_stock_points_incremental(
     stats_holder: list = [None]
 
     def extract(spark_, last):
-        mv = spark_.read.parquet(raw_log_path)
+        mv = read_raw_log_since(spark_, raw_log_path, last)
+        if mv is None:
+            return None  # no day partition can hold a row past `last`
         if last is not None:
             mv = mv.filter(F.to_date("fecha") > F.lit(last).cast("date"))
         if complete_days_before is not None:
@@ -264,7 +318,9 @@ def run_stock_points_incremental(
             )
             .first()
         )
-        new_wm_holder[0] = row["m"].isoformat() if row["m"] is not None else None
+        if row["m"] is None:
+            return None  # empty slice: nothing to replay or publish
+        new_wm_holder[0] = row["m"].isoformat()
         stats_holder[0] = {
             "max_key_rows": int(row["max_key_rows"] or 0),
             "n_keys": int(row["n_keys"] or 0),

@@ -101,8 +101,18 @@ def run_sales_incremental(
     composite PK and keep-latest semantics, so both stay consistent
     under re-runs.
     """
+    from osmart_etl_spark.io.sinks import read_accumulate_ledger
+
     store = WatermarkStore(spark, watermark_path)
     accum_path = f"{sink_path.rstrip('/')}_accum"
+    # The run's state, read ONCE: the committed fold's high-water mark
+    # (one metadata-file read, no data pass) and the watermark. Crash
+    # recovery below and the extract both use these values.
+    try:
+        hwm = read_accumulate_ledger(spark, accum_path)["hwm"].get(f"sales:{tienda}")
+    except FileNotFoundError:
+        hwm = None  # first tick — no committed fold yet
+    last = store.get("sales", tienda)
 
     def extract(spark_, last):
         events = spark_.read.parquet(events_path)
@@ -116,16 +126,8 @@ def run_sales_incremental(
         # folded events are summed twice. Excising event_id <= hwm from
         # the slice makes the retry fold exactly the unfolded suffix
         # (the reference's watermark + re-filter discipline at the
-        # event grain). One metadata-file read, no data pass.
+        # event grain).
         last_id = int(last) if last is not None else None
-        from osmart_etl_spark.io.sinks import read_accumulate_ledger
-
-        try:
-            hwm = read_accumulate_ledger(spark_, accum_path)["hwm"].get(
-                f"sales:{tienda}"
-            )
-        except FileNotFoundError:
-            hwm = None  # first tick — no committed fold yet
         if hwm is not None:
             last_id = int(hwm) if last_id is None else max(last_id, int(hwm))
         # RAW per-key slice partials only — normalization moves to load,
@@ -237,20 +239,14 @@ def run_sales_incremental(
     # double-count window from BOTH sides — already-folded events are
     # never re-summed, and a fold is never left unpublished.
     recovered_wm = None
-    from osmart_etl_spark.io.sinks import read_accumulate_ledger
-
-    try:
-        hwm = read_accumulate_ledger(spark, accum_path)["hwm"].get(f"sales:{tienda}")
-    except FileNotFoundError:
-        hwm = None
-    last = store.get("sales", tienda)
     if hwm is not None and (last is None or int(last) < int(hwm)):
         publish_from_accum(None)  # changed keys unknown — full publish
         store.set("sales", tienda, str(int(hwm)))
         recovered_wm = int(hwm)
+        last = str(recovered_wm)
 
     new_wm = run_incremental(
         spark, store=store, pipeline="sales", source_name=tienda,
-        extract=extract, load=load, wm_expr=wm,
+        extract=extract, load=load, wm_expr=wm, last=last,
     )
     return new_wm if new_wm is not None else recovered_wm

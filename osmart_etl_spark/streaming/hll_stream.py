@@ -69,10 +69,10 @@ def batch_registers(ev: DataFrame) -> DataFrame:
 def _fs_and_path_cls(spark: SparkSession, path_str: str):
     """(FileSystem, Path class) for ``path_str`` via the Hadoop FS API —
     resolves local, hdfs://, s3a://, … uniformly from the path scheme."""
-    jvm = spark._jvm
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    fs = path_cls(path_str).getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path_cls
+    from osmart_etl_spark.io.atomic import _hadoop
+
+    _, path_cls, conf = _hadoop(spark)
+    return path_cls(path_str).getFileSystem(conf), path_cls
 
 
 def _list_versions(

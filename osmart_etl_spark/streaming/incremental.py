@@ -57,16 +57,23 @@ class WatermarkStore:
         self.path = path
 
     def read_all(self) -> DataFrame:
-        from osmart_etl_spark.io.atomic import current_version, read_committed
+        """Every watermark row. The commit log is listed once, and the
+        current version directory is read with ``WATERMARK_SCHEMA``, so
+        a read runs no schema-inference Spark job. A store with no
+        commit log reads as empty when the path is missing, or as the
+        pre-round-12 plain layout when it is not."""
+        from osmart_etl_spark.io.atomic import read_committed
         from osmart_etl_spark.io.sources import path_exists
 
         # Only a genuinely missing store reads as empty; a transient FS
         # error must raise, not silently reset the watermark (which would
         # re-extract and duplicate-append the whole history).
-        if current_version(self.spark, self.path) is not None:
-            return read_committed(self.spark, self.path).select(
-                *[f.name for f in WATERMARK_SCHEMA.fields]
-            )
+        try:
+            return read_committed(
+                self.spark, self.path, schema=WATERMARK_SCHEMA
+            ).select(*[f.name for f in WATERMARK_SCHEMA.fields])
+        except FileNotFoundError:
+            pass  # no committed version
         if not path_exists(self.spark, self.path):
             return self.spark.createDataFrame([], WATERMARK_SCHEMA)
         # pre-round-12 plain layout — adopted on the next set()
@@ -132,28 +139,39 @@ class WatermarkStore:
         )
 
 
+_UNREAD = object()
+
+
 def run_incremental(
     spark: SparkSession,
     *,
     store: WatermarkStore,
     pipeline: str,
     source_name: str,
-    extract: Callable[[SparkSession, Any | None], DataFrame],
+    extract: Callable[[SparkSession, Any | None], DataFrame | None],
     load: Callable[[DataFrame], None],
     wm_expr: Callable[[DataFrame], Any],
+    last: Any = _UNREAD,
 ) -> Any | None:
     """One incremental run for one (pipeline, store): extract past the
     watermark, load, advance the watermark (T1/T2/T6).
 
     ``extract(spark, last_wm)`` returns only rows beyond ``last_wm``
-    (None = full backfill — the seed_* scripts' default-epoch path);
+    (None = full backfill — the seed_* scripts' default-epoch path),
+    or None when it already knows that nothing lies past it: the run
+    then ends before the checkpoint, the load and the watermark write.
     ``wm_expr(df)`` computes the new high-water mark (scalar, A4).
+    ``last`` passes a watermark the caller has just read from ``store``
+    (None included), so the run does not read it again.
     The watermark writes only after ``load`` returns, so a crash between
     load and checkpoint re-processes the slice — which the idempotent
     sink absorbs, the reference's exact recovery story (T6).
     """
-    last = store.get(pipeline, source_name)
+    if last is _UNREAD:
+        last = store.get(pipeline, source_name)
     batch = extract(spark, last)
+    if batch is None:
+        return None  # nothing past the watermark
     # ONE evaluation of the extract lineage (round-12 review): wm_expr's
     # aggregate and load's sink write used to each run the full DAG —
     # doubling every tick's scan/groupBy cost and letting the two

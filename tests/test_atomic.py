@@ -350,3 +350,33 @@ def test_sidecar_rides_the_commit(spark, tmp_path):
     assert read_sidecar(spark, t) == {"max_key_rows": 9, "n_keys": 3}
     # full-replace commit left {2}; the upsert merged {3} on top
     assert {r["k"] for r in read_committed(spark, t).collect()} == {2, 3}
+
+
+def test_hadoop_path_class_resolved_once_per_spark_context(monkeypatch):
+    """The Hadoop Path class costs py4j reflection round trips to
+    resolve: it is looked up once per SparkContext, and again for a new
+    context (after ``stop()``) even on the same gateway."""
+    from types import SimpleNamespace
+
+    lookups = []
+
+    class JvmPackage:
+        def __getattr__(self, name):
+            lookups.append(name)
+            return (lambda p: ("Path", p)) if name == "Path" else self
+
+    class Jsc:
+        def hadoopConfiguration(self):
+            return "conf"
+
+    monkeypatch.setattr(atomic, "_HADOOP", None)
+    jvm = JvmPackage()
+    first = SimpleNamespace(_jsc=Jsc(), _jvm=jvm)
+    assert atomic.hadoop_path(first, "/a") == ("Path", "/a")
+    per_resolve = len(lookups)
+    assert per_resolve == 5  # org.apache.hadoop.fs.Path
+    assert atomic.hadoop_path(first, "/b") == ("Path", "/b")
+    assert len(lookups) == per_resolve
+    restarted = SimpleNamespace(_jsc=Jsc(), _jvm=jvm)
+    assert atomic.hadoop_path(restarted, "/c") == ("Path", "/c")
+    assert len(lookups) == 2 * per_resolve

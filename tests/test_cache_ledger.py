@@ -11,9 +11,12 @@ pathology).
 
 from __future__ import annotations
 
+import logging
+from types import SimpleNamespace
+
 import pytest
 
-from osmart_etl_spark.caching import ledger_size, release_persisted
+from osmart_etl_spark.caching import led_register, ledger_size, release_persisted
 from osmart_etl_spark.queries.base import REGISTRY
 
 from tests.conftest import SF_SMALL
@@ -66,3 +69,28 @@ def test_next_build_releases_previous(spark):
     REGISTRY["asof_lookup"].fn(spark, SF_SMALL)
     assert _cache_manager_empty(spark)
     assert ledger_size() == 0
+
+
+def test_release_skips_stopped_context_and_logs_other_failures(caplog):
+    """A frame of a stopped SparkContext is skipped without a call; an
+    unpersist that raises is logged and the rest of the ledger still
+    releases."""
+    calls = []
+
+    def frame(jsc, fail=False):
+        def unpersist():
+            calls.append(jsc)
+            if fail:
+                raise RuntimeError("boom")
+
+        session = SimpleNamespace(_sc=SimpleNamespace(_jsc=jsc))
+        return SimpleNamespace(sparkSession=session, unpersist=unpersist)
+
+    led_register(frame(None))
+    led_register(frame("failing", fail=True))
+    led_register(frame("live"))
+    with caplog.at_level(logging.WARNING, logger="osmart_etl_spark.caching"):
+        assert release_persisted() == 3
+    assert calls == ["live", "failing"]
+    assert ledger_size() == 0
+    assert "unpersist failed" in caplog.text and "boom" in caplog.text

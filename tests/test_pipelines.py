@@ -5,6 +5,7 @@ store, upsert sinks, DQ module — the reference's operational semantics
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -516,6 +517,152 @@ def test_stock_points_complete_days_only(spark, tmp_path, events_parquet):
     assert wm is not None and wm <= "2024-01-15"
     max_pt = read_committed(spark, pts_cut).agg(F.max("point_date").alias("m")).first()["m"]
     assert max_pt <= cutoff  # spine extends to max movement day + 1 == cutoff at most
+
+
+#: A day boundary near the middle of the sf0.001 events (2024-01-01 to
+#: 2024-01-30): EP3's date watermark needs whole days per tick.
+MID_DAY = dt.datetime(2024, 1, 16)
+
+
+def _dense_sod(spark, points) -> dict:
+    """The day-level SOD series of a points frame over the whole event
+    calendar (raw change-point rows may encode change days differently
+    between an incremental and a one-shot run)."""
+    from osmart_etl_spark.ops.temporal import sparse_decode
+
+    return {
+        (r["art_id"], r["cal_date"]): r["sod_stock"]
+        for r in sparse_decode(points, spark, "2024-01-01", "2024-02-01", ["art_id"]).collect()
+    }
+
+
+def _full_points(spark, events):
+    from osmart_etl_spark.pipelines.inventory import (
+        compute_stock_points,
+        normalize_movements,
+    )
+
+    return compute_stock_points(normalize_movements(events), None, spark)
+
+
+def _lake_state(root) -> tuple[dict, set]:
+    """(current committed (seq, token) of every commit-logged table,
+    every file) under the local directory ``root``."""
+    from osmart_etl_spark.io.atomic import _parse_commit_log
+
+    seqs, files = {}, set()
+    for d, dirs, names in os.walk(root):
+        if "_commits" in dirs:
+            seqs[d] = _parse_commit_log(os.listdir(os.path.join(d, "_commits")))[-1]
+        files.update(os.path.relpath(os.path.join(d, n), root) for n in names)
+    return seqs, files
+
+
+def test_run_etl_ticks_equal_full_recompute_and_noop_tick_is_free(
+    spark, tmp_path, events_parquet, monkeypatch
+):
+    """Two run_etl ticks (the first half of the events, then all of them)
+    equal a one-shot full recompute, and a third tick with nothing new
+    publishes no version, writes no file and never replays (ROADMAP
+    direction 5: a no-op tick writes 0 rows and publishes nothing)."""
+    from osmart_etl_spark.pipelines import inventory
+    from osmart_etl_spark.pipelines.orchestrator import run_etl
+    from osmart_etl_spark.pipelines.sales import extract_sales, normalize_payments
+
+    replays = []
+    real = inventory.compute_stock_points
+    monkeypatch.setattr(
+        inventory, "compute_stock_points",
+        lambda *a, **k: replays.append(1) or real(*a, **k),
+    )
+    events = spark.read.parquet(events_parquet)
+    live = str(tmp_path / "events_live")
+    events.filter(F.col("ts") < F.lit(MID_DAY)).write.parquet(live)
+    lake = tmp_path / "lake"
+    paths = {
+        "events_path": live,
+        "ventas_path": str(lake / "ventas"),
+        "raw_log_path": str(lake / "raw"),
+        "points_path": str(lake / "points"),
+        "watermark_path": str(lake / "wm"),
+    }
+    assert run_etl(spark, **paths).failed == {}
+    events.filter(F.col("ts") >= F.lit(MID_DAY)).write.mode("append").parquet(live)
+    tick2 = run_etl(spark, **paths)
+    assert tick2.failed == {}
+    assert replays == [1, 1]
+
+    cols = [
+        "user_id", "efectivo_in", "tarjeta_in", "total_venta", "efectivo",
+        "tarjeta", "otros", "payment_issue", "fecha_hora", "last_event_id",
+    ]
+    full_sales = normalize_payments(extract_sales(events, None))
+    assert sorted(read_merge_table(spark, paths["ventas_path"]).select(cols).collect()) == sorted(
+        full_sales.select(cols).collect()
+    )
+    assert _dense_sod(spark, read_committed(spark, paths["points_path"])) == _dense_sod(
+        spark, _full_points(spark, events)
+    )
+
+    seqs, files = _lake_state(lake)
+    assert len(seqs) > 4  # ventas buckets, accumulator, points, watermarks
+    replays.clear()  # the full recompute above went through the spy too
+    noop = run_etl(spark, **paths)
+    assert noop.failed == {}
+    assert noop.watermarks == {
+        "sales:tienda_01": None, "raw_movements:tienda_01": None,
+        "stock_points:tienda_01": None,
+    }
+    assert _lake_state(lake) == (seqs, files)
+    assert replays == []
+
+
+def test_stock_points_tick_reads_only_raw_log_days_past_watermark(
+    spark, tmp_path, events_parquet
+):
+    """EP3 reads only the raw-log day partitions that can hold rows past
+    its watermark: after the first tick, a garbage file in an older day
+    partition is never opened, and the second tick still equals a full
+    recompute. An EP3 that scans the whole history fails on it."""
+    from osmart_etl_spark.pipelines.inventory import (
+        RAW_DAY_SLACK,
+        run_raw_movements_incremental,
+        run_stock_points_incremental,
+    )
+
+    raw = str(tmp_path / "raw")
+    points = str(tmp_path / "points")
+    wmp = str(tmp_path / "wm")
+    events = spark.read.parquet(events_parquet)
+    part1 = str(tmp_path / "ev1")
+    events.filter(F.col("ts") < F.lit(MID_DAY)).write.parquet(part1)
+    run_raw_movements_incremental(
+        spark, events_path=part1, raw_log_path=raw, watermark_path=wmp
+    )
+    wm1 = run_stock_points_incremental(
+        spark, raw_log_path=raw, points_path=points, watermark_path=wmp
+    )
+    assert wm1 == (MID_DAY.date() - dt.timedelta(days=1)).isoformat()
+
+    oldest = sorted(n for n in os.listdir(raw) if n.startswith("fecha_dia="))[0]
+    assert dt.date.fromisoformat(oldest.split("=")[1]) < (
+        dt.date.fromisoformat(wm1) - dt.timedelta(days=RAW_DAY_SLACK)
+    )
+    parts = [n for n in os.listdir(os.path.join(raw, oldest)) if n.endswith(".parquet")]
+    assert parts
+    for n in parts:
+        with open(os.path.join(raw, oldest, n), "wb") as fh:
+            fh.write(b"not a parquet file" * 64)
+
+    run_raw_movements_incremental(
+        spark, events_path=events_parquet, raw_log_path=raw, watermark_path=wmp
+    )
+    assert run_stock_points_incremental(
+        spark, raw_log_path=raw, points_path=points, watermark_path=wmp
+    ) == "2024-01-30"
+    assert _dense_sod(spark, read_committed(spark, points)) == _dense_sod(
+        spark, _full_points(spark, events)
+    )
 
 
 @pytest.mark.slow
